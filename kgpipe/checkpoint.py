@@ -70,12 +70,12 @@ def sweep_gaps(spark: SparkSession, present, lo: int, hi: int) -> int:
     """S7 range-driven gap accounting: how many keys in [lo, hi] have NO
     row in ``present`` (one integer column). The reference's codepoint
     loop tallies characters whose detail page never materialized
-    (/root/reference/hanzi/hanyuguoxue.py:1146-1242); the Spark
-    restatement is an anti-join of the expected universe against the
-    observed keys — one shuffle on a dense uniform key."""
-    universe = spark.range(lo, hi + 1).select(F.col("id").alias("_k"))
-    observed = present.toDF("_k").distinct()
-    return universe.join(observed, "_k", "left_anti").count()
+    (hanyuguoxue.py:1146-1242 of the reference). The anti-join of the
+    universe against the observed keys equals the universe size
+    minus the distinct observed keys inside it, which one aggregate over
+    the observed keys computes without materializing the universe."""
+    observed = present.toDF("_k").where(F.col("_k").between(lo, hi))
+    return (hi - lo + 1) - observed.agg(F.count_distinct("_k")).first()[0]
 
 
 #: composed-of dimension rows beyond which the runner switches the
@@ -115,6 +115,35 @@ def _metrics_row(
     wh.run_metrics.append(spark.createDataFrame([row], wh.run_metrics.schema))
 
 
+def _global_hanzi_dim(corpus: DataFrame) -> tuple[DataFrame, str]:
+    """GLOBAL composed-of dimension and its join mode: a word in one
+    bucket must still link characters whose zidian page lives in another
+    bucket. Derived from the PARSED pages after the same validity gate
+    build_graph applies (error IS NULL and basic_info character present)
+    — a path-codepoint decode would admit characters the per-bucket
+    pipeline rejects and silently diverge from the single-shot result on
+    malformed pages. One global parse pass over the zidian family,
+    pinned once and reused by every bucket."""
+    from kgpipe.parse.udfs import make_parse_hanzi_udf
+
+    parse_basic_udf = make_parse_hanzi_udf(("basic_info",))
+    hanzi_dim = (
+        corpus.where(F.col("path").startswith("zidian/"))
+        .select(parse_basic_udf("content", "path").alias("parsed"))
+        .where(
+            F.col("parsed.error").isNull()
+            & F.col("parsed.basic_info.data.character").isNotNull()
+        )
+        .select(F.col("parsed.basic_info.data.character").alias("name"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    composed_mode = (
+        "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
+    )
+    return hanzi_dim, composed_mode
+
+
 def run_incremental(
     spark: SparkSession,
     corpus: DataFrame,
@@ -136,12 +165,16 @@ def run_incremental(
     interrupted unit re-runs to an identical result.
 
     ``sweep_range`` enables S7 gap accounting: after the last unit, the
-    codepoint universe [lo, hi] is anti-joined against the observed
-    zidian pages and the gap count recorded as a final metrics row
-    (the reference's per-codepoint failure tally,
+    codepoints in [lo, hi] with no zidian page are counted and recorded
+    as a final metrics row (the reference's per-codepoint failure tally,
     hanyuguoxue.py:1146-1242).
+
+    A resume with nothing pending runs no parse at all: the global
+    hanzi dimension is built only when some unit is pending, so such a
+    call costs the checkpoint read plus the optional sweep.
     """
     wh = Warehouse(warehouse_root)
+    pending = pending_units(wh, spark, n_buckets, run_id=run_id)
 
     # co-bucket pages and seeds on the normalized linkage key; zidian
     # pages (no seeds) bucket on path
@@ -152,31 +185,8 @@ def run_incremental(
     corpus_b = corpus.withColumn("_bucket", bucket_of(page_key, n_buckets))
     seeds_b = seeds.withColumn("_bucket", bucket_of(normalize_title(F.col("name")), n_buckets))
 
-    # GLOBAL composed-of dimension: a word in one bucket must still link
-    # characters whose zidian page lives in another bucket. Derived from
-    # the PARSED pages after the same validity gate build_graph applies
-    # (error IS NULL and basic_info character present) — a path-codepoint
-    # decode would admit characters the per-bucket pipeline rejects and
-    # silently diverge from the single-shot result on malformed pages.
-    # One global parse pass over the zidian family, pinned once and
-    # reused by every bucket.
-    from kgpipe.parse.udfs import make_parse_hanzi_udf
-
-    parse_basic_udf = make_parse_hanzi_udf(("basic_info",))
-    hanzi_dim = (
-        corpus.where(F.col("path").startswith("zidian/"))
-        .select(parse_basic_udf("content", "path").alias("parsed"))
-        .where(
-            F.col("parsed.error").isNull()
-            & F.col("parsed.basic_info.data.character").isNotNull()
-        )
-        .select(F.col("parsed.basic_info.data.character").alias("name"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    composed_mode = (
-        "salted" if hanzi_dim.count() > SALTED_DIM_THRESHOLD else "broadcast"
-    )
+    if pending:
+        hanzi_dim, composed_mode = _global_hanzi_dim(corpus)
 
     from kgpipe.session import free_cached_since, persistent_rdd_ids
 
@@ -185,7 +195,6 @@ def run_incremental(
     # shared hanzi dimension (and anything the caller pinned) alive
     keep_rdds = persistent_rdd_ids(spark.sparkContext)
 
-    pending = pending_units(wh, spark, n_buckets, run_id=run_id)
     for bucket in pending:
         t0 = time.time()
         part_key = f"{run_id}-bucket-{bucket}"
@@ -284,7 +293,7 @@ def run_incremental(
         t0 = time.time()
         lo, hi = sweep_range
         observed = corpus.where(F.col("path").startswith("zidian/")).select(
-            F.regexp_extract("path", r"zi-(\d+)", 1).cast("long")
+            F.regexp_extract("path", r"zi-(\d+)", 1).try_cast("long")
         )
         gaps = sweep_gaps(spark, observed, lo, hi)
         _metrics_row(

@@ -36,12 +36,11 @@ def normalize_title(col: Column | str) -> Column:
 
 def link_seeds_to_pages(
     seeds: DataFrame, parsed: DataFrame, name_col: str
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """J2: seed names ⋈ parsed page titles on the normalized form.
 
-    Returns (linked, missing): ``linked`` carries every seed column plus
-    the page's parse struct; ``missing`` is the seeds that found no valid
-    detail page (the reference's missing_detail_pages path).
+    Returns ``linked``: every seed column plus the page's parse struct.
+    The seeds that found no page are ``unlinked_seeds`` of its titles.
 
     Join strategy is left to Catalyst + AQE deliberately: when the seed
     universe is small it broadcasts (runtime-converted by AQE from actual
@@ -53,9 +52,20 @@ def link_seeds_to_pages(
     """
     s = seeds.withColumn("_k", normalize_title("name"))
     p = parsed.withColumn("_k", normalize_title(F.col(name_col)))
-    linked = s.join(p, "_k", "inner").drop("_k")
-    missing = s.join(p.select("_k"), "_k", "left_anti").drop("_k")
-    return linked, missing
+    return s.join(p, "_k", "inner").drop("_k")
+
+
+def unlinked_seeds(seeds: DataFrame, linked_names: DataFrame) -> DataFrame:
+    """Seeds with no detail page (the reference's missing_detail_pages
+    path): ``seeds`` anti-joined on the normalized name against
+    ``linked_names`` (one ``name`` column), the titles of the pages
+    ``link_seeds_to_pages`` linked. A seed links iff some page title
+    normalizes to its own normalized name, and every such page is then
+    linked, so this equals the anti-join against all parsed pages —
+    without parsing them again."""
+    s = seeds.withColumn("_k", normalize_title("name"))
+    found = linked_names.select(normalize_title("name").alias("_k"))
+    return s.join(found, "_k", "left_anti").drop("_k")
 
 
 def dim_broadcast_join(

@@ -18,6 +18,13 @@ the pointer once and read an immutable file list — Iceberg's reader
 isolation. A crash before the pointer swap leaves unreferenced data
 files (harmless orphans), never a partial table.
 
+Bucketed tables lay their data out as ``c<commit>/kb=<bucket>/`` and
+hash-distribute each commit's rows on ``kb`` before the write, so a
+commit writes at most one file per bucket at small sizes (AQE splits a
+bucket only once it outgrows the advisory partition size). The file
+count then tracks commits × touched buckets, not commits × input
+partitions × buckets, which keeps reader-side file listing cheap.
+
 Commit cost is O(delta), not O(table):
 
   * ``append``        — writes the new rows, reuses every old file;
@@ -235,11 +242,14 @@ class SnapshotTable:
     def _write_data(self, df: DataFrame) -> list[dict]:
         """Write a new immutable data directory; return its file entries.
         Bucketed tables partition by the key hash so future merges can
-        prune to colliding buckets."""
+        prune to colliding buckets, and hash-distribute the rows on that
+        bucket first (Iceberg's ``write.distribution-mode=hash``) so one
+        task writes each bucket, not every input partition."""
         target = os.path.join(self.path, "data", f"c{uuid.uuid4().hex[:12]}")
         if self.bucket_keys:
             (
                 df.withColumn("kb", self._bucket_col())
+                .hint("rebalance", F.col("kb"))
                 .write.partitionBy("kb")
                 .parquet(target)
             )
@@ -276,9 +286,10 @@ class SnapshotTable:
     def _affected(self, incoming: DataFrame) -> tuple[list[dict], list[dict]]:
         """Split current files into (colliding-bucket, untouched-bucket)
         by the incoming batch's bucket membership (one tiny collect of at
-        most n_buckets values)."""
+        most n_buckets values; no job at all when the table holds no
+        files, as on its first commit)."""
         current = self.manifest()
-        if not self.bucket_keys:
+        if not self.bucket_keys or not current:
             return current, []
         hit = {
             r.kb

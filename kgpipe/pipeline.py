@@ -275,10 +275,10 @@ def build_graph(
     seeds = seeds.where(F.col("name").isNotNull())
     idiom_seeds = seeds.where(F.col("entity_type") == "Idiom").select("name")
     word_seeds = seeds.where(F.col("entity_type") == "Word").select("name")
-    idiom_linked, idiom_missing = L.link_seeds_to_pages(
+    idiom_linked = L.link_seeds_to_pages(
         idiom_seeds, chengyu_parsed, "parsed.data.chengyu"
     )
-    word_linked, word_missing = L.link_seeds_to_pages(
+    word_linked = L.link_seeds_to_pages(
         word_seeds, cidian_parsed, "parsed.data.word"
     )
 
@@ -353,6 +353,15 @@ def build_graph(
             _spawn("hz", hz_valid.count),
             _spawn("mapping", lambda: canonical_mapping(_variant_edges_of(hz_valid))),
         ]
+    # missing seeds from the (checkpointed) linked term names, not from
+    # a second parse of the term pages (see L.unlinked_seeds)
+    idiom_missing = L.unlinked_seeds(
+        idiom_seeds, terms.where(F.col("entity_type") == "Idiom")
+    )
+    word_missing = L.unlinked_seeds(
+        word_seeds, terms.where(F.col("entity_type") == "Word")
+    )
+
     def _make_errors() -> DataFrame:
         return hz.where(
             F.col("error").isNotNull() | F.col("basic_info.data.character").isNull()

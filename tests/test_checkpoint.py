@@ -5,7 +5,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe.checkpoint import finalize, pending_units, run_incremental
+from kgpipe.checkpoint import finalize, pending_units, run_incremental, sweep_gaps
 from kgpipe.corpus import corpus_to_dataframes
 from kgpipe.materialize import SnapshotTable, Warehouse
 from kgpipe.pipeline import build_graph
@@ -268,9 +268,25 @@ def test_sweep_gap_accounting(spark, frames, tmp_path):
 
     # --sweep on a run whose buckets are ALL already checkpointed must
     # still run the gap accounting (previously silently skipped when
-    # nothing was pending)
+    # nothing was pending). Its corpus adds a duplicate codepoint, keys
+    # on both sides of [lo, hi] and a non-numeric zidian/ path: none of
+    # them may move the tally, which must equal the anti-join of the
+    # universe against the observed keys.
+    page = holed.where(F.col("path").startswith("zidian/")).limit(1)
+    swept = holed
+    for path in (f"zidian/zi-{lo}-copy", f"zidian/zi-{lo - 3}",
+                 f"zidian/zi-{hi + 7}", "zidian/index"):
+        swept = swept.unionByName(page.withColumn("path", F.lit(path)))
+    observed = swept.where(F.col("path").startswith("zidian/")).select(
+        F.regexp_extract("path", r"zi-(\d+)", 1).try_cast("long").alias("_k")
+    )
+    anti_join = (
+        spark.range(lo, hi + 1).toDF("_k").join(observed, "_k", "left_anti").count()
+    )
+    assert anti_join == expected
+    assert sweep_gaps(spark, observed, lo, hi) == anti_join
     wh = run_incremental(
-        spark, holed, sdf, str(tmp_path / "whsweep"), n_buckets=2,
+        spark, swept, sdf, str(tmp_path / "whsweep"), n_buckets=2,
         sweep_range=(lo, hi),
     )
     sweep_rows = (
@@ -280,6 +296,67 @@ def test_sweep_gap_accounting(spark, frames, tmp_path):
     )
     assert len(sweep_rows) == 2
     assert all(r.missing_detail_pages == expected for r in sweep_rows)
+
+
+@pytest.fixture(scope="module")
+def one_unit_wh(spark, small_corpus, tmp_path_factory):
+    """A warehouse filled by one fully checkpointed unit (n_buckets=1)."""
+    cdf, sdf = corpus_to_dataframes(spark, small_corpus)
+    root = str(tmp_path_factory.mktemp("one_unit") / "wh")
+    run_incremental(spark, cdf, sdf, root, n_buckets=1)
+    return root, cdf, sdf
+
+
+@pytest.mark.slow
+def test_resume_with_nothing_pending_runs_no_parse(
+    spark, one_unit_wh, monkeypatch
+):
+    """A resume with every unit checkpointed must not build the global
+    hanzi dimension (a parse of every zidian page), and must still append
+    its sweep_completed row."""
+    import kgpipe.parse.udfs
+
+    def no_parse(*_args, **_kwargs):
+        raise AssertionError("resume with nothing pending parsed zidian pages")
+
+    monkeypatch.setattr(kgpipe.parse.udfs, "make_parse_hanzi_udf", no_parse)
+    root, cdf, sdf = one_unit_wh
+    versions = {t: getattr(Warehouse(root), t).current_version()
+                for t in ("nodes", "edges", "checkpoints", "errors")}
+    wh = run_incremental(
+        spark, cdf, sdf, root, n_buckets=1, sweep_range=(0x4E00, 0x4E10)
+    )
+    assert versions == {t: getattr(wh, t).current_version() for t in versions}
+    reasons = [r.termination_reason for r in wh.run_metrics.read(spark).collect()]
+    assert reasons.count("sweep_completed") == 1
+
+
+@pytest.mark.slow
+def test_finalize_reads_edges_without_file_listing(spark, one_unit_wh, monkeypatch):
+    """One commit writes at most one file per bucket, so finalize's read
+    of a one-unit warehouse's edges resolves its file list without a
+    Spark file-listing job (Spark lists in parallel above 32 paths)."""
+    root, _, _ = one_unit_wh
+    wh = Warehouse(root)
+    assert len(wh.edges.manifest()) <= wh.edges.n_buckets
+    assert len(wh.nodes.manifest()) <= wh.nodes.n_buckets
+
+    sc = spark.sparkContext
+    group = "finalize-edges-read"
+    read = wh.edges.read
+
+    def read_in_group(spark_, version=None):
+        sc.setJobGroup(group, "edges read")
+        try:
+            return read(spark_, version)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(wh.edges, "read", read_in_group)
+    _, triples = finalize(wh, spark)
+    assert triples.count() > 0
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_insert_ignore_commits_are_o_delta(spark, tmp_path):
@@ -321,6 +398,47 @@ def test_insert_ignore_commits_are_o_delta(spark, tmp_path):
     )
     assert t.read(spark).count() == 5 * batch_rows
     assert t.commit_delta_bytes(v) < min(deltas) / 2
+
+
+def test_commits_write_at_most_one_file_per_bucket(spark, tmp_path):
+    """A commit hash-distributes its rows on the bucket before writing, so
+    a 32-partition input already partitioned on the merge keys (the shape
+    of the runner's deduped edges and nodes) writes at most ``n_buckets``
+    files, not one per (input partition, bucket) pair — both into an
+    empty table and into one whose buckets all collide."""
+    from kgpipe.schemas import EDGES_SCHEMA
+
+    def new_files(t, v):
+        before = {e["path"] for e in t.manifest(v - 1)} if v > 1 else set()
+        return [e for e in t.manifest(v) if e["path"] not in before]
+
+    edge_keys = ["src_id", "dst_id", "rel_type"]
+    edges = SnapshotTable(
+        str(tmp_path / "edges"), EDGES_SCHEMA, bucket_keys=edge_keys, n_buckets=8
+    )
+    nodes = SnapshotTable(
+        str(tmp_path / "nodes"), NODES_SCHEMA, bucket_keys=["node_id"], n_buckets=8
+    )
+    prio = [F.col("crawled").desc(), F.col("url").asc_nulls_last()]
+    for i in range(2):
+        e = spark.createDataFrame(
+            [(i * 2000 + j, j % 13, "synonym", f"s{j}", f"d{j}", None, "r")
+             for j in range(2000)],
+            EDGES_SCHEMA,
+        ).repartition(32, *edge_keys).persist()
+        n = spark.createDataFrame(
+            [(i * 2000 + j, "Hanzi", f"n{j}", None, None, False, "r", None)
+             for j in range(2000)],
+            NODES_SCHEMA,
+        ).repartition(32, "node_id").persist()
+        assert e.rdd.getNumPartitions() == n.rdd.getNumPartitions() == 32
+        v = edges.insert_ignore(e, keys=edge_keys, order_by=["src_name"])
+        assert 0 < len(new_files(edges, v)) <= edges.n_buckets
+        v = nodes.merge_best(n, keys=["node_id"], priority=prio)
+        assert 0 < len(new_files(nodes, v)) <= nodes.n_buckets
+        e.unpersist()
+        n.unpersist()
+    assert edges.read(spark).count() == nodes.read(spark).count() == 4000
 
 
 def test_merge_best_rewrites_only_colliding_buckets(spark, tmp_path):

@@ -99,6 +99,64 @@ def test_missing_detail_pages_counted(graph, small_corpus):
     assert missing_names.isdisjoint(linked_names)
 
 
+def test_missing_seeds_equal_parsed_page_anti_join(spark, small_corpus):
+    """build_graph counts the missing seeds against the linked term names
+    instead of parsing the term pages a second time. On malformed term
+    and zidian pages, spaced and duplicated seed names and seeds with no
+    page, the result must equal the anti-join of the seeds against the
+    normalized titles of all parsed pages, row for row."""
+    from kgpipe.link import normalize_title
+    from kgpipe.pipeline import parse_chengyu_pruned_udf, parse_ciyu_pruned_udf
+
+    cdf, _ = corpus_to_dataframes(spark, small_corpus)
+    bad = [
+        cdf.where(F.col("path").startswith(f"{family}/")).select("path").first().path
+        for family in ("zidian", "chengyu", "cidian")
+    ]
+    corrupt = cdf.withColumn(
+        "content",
+        F.when(F.col("path").isin(*bad), F.lit("<div>truncated")).otherwise(
+            F.col("content")
+        ),
+    )
+    base = [s for s in small_corpus.seeds if s["name"]]
+    idioms = [s for s in base if s["entity_type"] == "Idiom"][:3]
+    words = [s for s in base if s["entity_type"] == "Word"][:3]
+    extra = (
+        [{"name": " ".join(s["name"]), "entity_type": s["entity_type"]} for s in idioms + words]
+        + idioms[:1] + words[:1]  # duplicated seed names
+        + [{"name": "无页之成语", "entity_type": "Idiom"},
+           {"name": "无 页 词", "entity_type": "Word"},
+           {"name": None, "entity_type": "Word"}]
+    )
+    from kgpipe.schemas import SEED_SCHEMA
+
+    sdf = spark.createDataFrame(small_corpus.seeds + extra, SEED_SCHEMA)
+    g = build_graph(spark, corrupt, sdf)
+
+    def old_missing(entity_type, family, udf, title):
+        titles = corrupt.where(F.col("path").startswith(f"{family}/")).select(
+            normalize_title(udf("content", "path")["data"][title]).alias("_k")
+        )
+        return (
+            sdf.where(F.col("name").isNotNull() & (F.col("entity_type") == entity_type))
+            .withColumn("_k", normalize_title("name"))
+            .join(titles, "_k", "left_anti")
+            .select("name", "entity_type")
+        )
+
+    old = {
+        "Idiom": old_missing("Idiom", "chengyu", parse_chengyu_pruned_udf, "chengyu"),
+        "Word": old_missing("Word", "cidian", parse_ciyu_pruned_udf, "word"),
+    }
+    rows = {et: sorted((r.name, r.entity_type) for r in df.collect()) for et, df in old.items()}
+    assert rows["Idiom"] and rows["Word"]
+    assert g.family_counts["idiom_missing"] == len(rows["Idiom"])
+    assert g.family_counts["word_missing"] == len(rows["Word"])
+    got = sorted((r.name, r.entity_type) for r in g.missing.collect())
+    assert got == sorted(rows["Idiom"] + rows["Word"])
+
+
 def test_no_self_loops(graph):
     assert graph.edges.where(F.col("src_id") == F.col("dst_id")).count() == 0
     assert graph.edges_canonical.where(F.col("src_id") == F.col("dst_id")).count() == 0

@@ -79,10 +79,10 @@ def main() -> None:
     seeds = sdf.where(F.col("name").isNotNull())
     idiom_seeds = seeds.where(F.col("entity_type") == "Idiom").select("name")
     word_seeds = seeds.where(F.col("entity_type") == "Word").select("name")
-    idiom_linked, _ = L.link_seeds_to_pages(
+    idiom_linked = L.link_seeds_to_pages(
         idiom_seeds, chengyu_parsed, "parsed.data.chengyu"
     )
-    word_linked, _ = L.link_seeds_to_pages(
+    word_linked = L.link_seeds_to_pages(
         word_seeds, cidian_parsed, "parsed.data.word"
     )
     terms = _term_frame(idiom_linked, "Idiom", "chengyu").unionByName(
